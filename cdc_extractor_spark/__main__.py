@@ -57,7 +57,7 @@ def _cmd_run(args: argparse.Namespace) -> int:
             f"uptodate_ms={r['uptodate_ms']}"
         )
     # an epoch whose batch the table filter empties reports null
-    # uptodate (agg over zero rows) — skip it, don't crash on it
+    # uptodate (max over zero observed rows) — skip it, don't crash on it
     now_ms = max(
         (r["uptodate_ms"] for r in rows if r["uptodate_ms"] is not None),
         default=0,

@@ -8240,6 +8240,9 @@ def q_required_word_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     begin the r08 cohort rotation.
 #   After this round the oldest standing credit is r08 (42 names
 #   remaining of 44).
+# Later code-drift re-pin: streaming_microbatch_epochs (its epoch body
+# became one observed job per epoch) takes the second r08 pad's slot,
+# so anti_join_dormant_customers returns to the r08 cohort.
 DRIVER_WINDOW: tuple[str, ...] = (
     # r14 optimization re-pins: every query whose reachable helpers
     # drifted in this round's rewrites (see REPINS for mechanisms)
@@ -8269,7 +8272,9 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "streaming_upsert_snapshot", "text_keyword_rake",
     "time_weighted_value", "vocab_growth_curve",
     # vintage refresh: the r08 cohort begins (alphabetical head)
-    "ann_ivf_index_merge", "anti_join_dormant_customers",
+    "ann_ivf_index_merge",
+    # code-drift re-pin: run_cdc_pipeline's epoch body rewritten
+    "streaming_microbatch_epochs",
 )
 
 _R7 = "vintage refresh: oldest driver credit (r07 cohort close-out)"
@@ -8337,7 +8342,11 @@ REPINS: dict[str, str] = {
     "#8): driver-green row predates the r13 gram-stream rewrite of "
     "its reachable helpers; re-certified on the current code",
     **{n: _R7 for n in DRIVER_WINDOW[22:48]},
-    **{n: _R8 for n in DRIVER_WINDOW[48:50]},
+    **{n: _R8 for n in DRIVER_WINDOW[48:49]},
+    "streaming_microbatch_epochs": "code-drift re-pin: run_cdc_pipeline's "
+    "epoch body observes the metrics inside the extract write (one Spark "
+    "job per epoch, metrics row published from the driver) and raises "
+    "on timeout; per-epoch rows re-verified EXACT against the oracle",
 }
 
 # Second tier: EMPTY — every non-window query holds driver-green
