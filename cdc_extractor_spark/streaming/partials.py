@@ -23,11 +23,19 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import cache
-from .pipeline import read_change_stream
+from .pipeline import read_change_stream, read_or_empty, run_available_now
 
-PARTIAL_COLS = ("action", "bucket", "bm")
+PARTIAL_SCHEMA = T.StructType(
+    [
+        T.StructField("action", T.StringType()),
+        T.StructField("bucket", T.LongType()),
+        T.StructField("bm", T.BinaryType()),
+    ]
+)
+PARTIAL_COLS = tuple(PARTIAL_SCHEMA.fieldNames())
 
 
 def epoch_partials(batch: DataFrame) -> DataFrame:
@@ -58,7 +66,8 @@ def run_incremental_bitmap_distinct(
     timeout_sec: int = 180,
 ) -> DataFrame:
     """Maintain the bitmap-partial table across every available epoch;
-    returns the final per-action exact distinct-key counts."""
+    returns the final per-action exact distinct-key counts (no rows when
+    the feed is empty)."""
     part_dir = os.path.join(out_dir, "partials")
     checkpoint_dir = os.path.join(out_dir, "bm_checkpoint")
 
@@ -78,16 +87,14 @@ def run_incremental_bitmap_distinct(
         # from one epoch.
         cache.publish_snapshot(version, part_dir)
 
-    q = (
+    run_available_now(
         read_change_stream(spark, feed_dir)
         .writeStream.foreachBatch(epoch_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return (
-        spark.read.parquet(part_dir)
+        read_or_empty(spark, part_dir, PARTIAL_SCHEMA)
         .groupBy("action")
         .agg(F.sum(F.bitmap_count("bm")).alias("n_distinct_keys"))
     )

@@ -7,7 +7,11 @@ by the staleness monitor (``QueryRequestRunnable.java:35``).  The
 Spark-first replacement keeps the running maximum in engine-managed,
 checkpointed per-group state via ``applyInPandasWithState`` — no shared
 mutable statics, crash-safe, and per *table* rather than one global
-(the obvious refinement the reference couldn't afford).
+(the obvious refinement the reference couldn't afford).  It is the
+only implementation: the ``transformWithStateInPandas`` twin needed
+``protobuf`` in the Python worker and was removed (SCALE.md, "Round-8:
+stateful streaming").  The run goes through
+``pipeline.sink_update_epochs``, so an empty feed returns zero rows.
 
 Scale: state is one ``(max_commit_ts_ms, total_rows)`` pair per table —
 O(tables), trivially partitioned by group key; Arrow-batched transfer
@@ -21,11 +25,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .pipeline import read_change_stream
+from .pipeline import read_change_stream, sink_update_epochs
 
 STATE_SCHEMA = T.StructType(
     [
@@ -59,58 +62,11 @@ def _advance_watermark(
     )
 
 
-def watermark_processor_class():
-    """The transformWithStateInPandas form of the freshness watermark
-    (Spark 4.x StatefulProcessor + ValueState), mirroring
-    ``snapshot_state.snapshot_processor_class``.  Import-guarded: the
-    TWS Python worker hard-requires the ``protobuf`` package (its
-    state-server protocol is protobuf-framed), which this container
-    lacks — on a cluster with protobuf installed,
-    ``run_stateful_watermark(..., use_tws=True)`` switches over with
-    identical semantics.  Decision record: see SCALE.md "Stateful
-    streaming: applyInPandasWithState vs transformWithStateInPandas"
-    (round 8)."""
-    import google.protobuf  # noqa: F401 — the TWS worker hard-requires it
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class WatermarkProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._wm = handle.getValueState(
-                "wm", "uptodate_ms LONG, total_rows LONG"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            up, total = (
-                tuple(self._wm.get()) if self._wm.exists() else (0, 0)
-            )
-            for pdf in rows:
-                if len(pdf):
-                    up = max(up, int(pdf["commit_ts_ms"].max()))
-                    total += len(pdf)
-            self._wm.update((up, total))
-            yield pd.DataFrame(
-                {
-                    "table_name": [key[0]],
-                    "uptodate_ms": [up],
-                    "total_rows": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return WatermarkProcessor
-
-
 def run_stateful_watermark(
     spark: SparkSession,
     feed_dir: str,
     out_dir: str,
     timeout_sec: int = 120,
-    use_tws: bool = False,
 ) -> DataFrame:
     """Run the stateful watermark over every available feed batch; the
     returned frame holds one row per (epoch, table) — the per-table
@@ -118,34 +74,13 @@ def run_stateful_watermark(
     result_dir = os.path.join(out_dir, "state_out")
     checkpoint_dir = os.path.join(out_dir, "state_checkpoint")
 
-    grouped = read_change_stream(spark, feed_dir).groupBy("table_name")
-    if use_tws:
-        updates = grouped.transformWithStateInPandas(
-            statefulProcessor=watermark_processor_class()(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        updates = grouped.applyInPandasWithState(
-            _advance_watermark,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.withColumn("epoch_id", F.lit(epoch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(result_dir)
-
-    q = (
-        updates.writeStream.foreachBatch(epoch_body)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    updates = read_change_stream(spark, feed_dir).groupBy(
+        "table_name"
+    ).applyInPandasWithState(
+        _advance_watermark,
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q.awaitTermination(timeout_sec)
-    return spark.read.parquet(result_dir)
+    return sink_update_epochs(updates, result_dir, checkpoint_dir, timeout_sec)

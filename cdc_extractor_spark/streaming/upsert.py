@@ -32,15 +32,23 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import cache
 from ..operators.cdc import latest_per_key
-from .pipeline import read_change_stream
+from .pipeline import read_change_stream, read_or_empty, run_available_now
 
-SNAPSHOT_COLS = (
-    "table_name", "key", "last_event_id", "last_action",
-    "last_val_cents", "last_commit_ts_ms",
+SNAPSHOT_SCHEMA = T.StructType(
+    [
+        T.StructField("table_name", T.StringType()),
+        T.StructField("key", T.LongType()),
+        T.StructField("last_event_id", T.LongType()),
+        T.StructField("last_action", T.StringType()),
+        T.StructField("last_val_cents", T.LongType()),
+        T.StructField("last_commit_ts_ms", T.LongType()),
+    ]
 )
+SNAPSHOT_COLS = tuple(SNAPSHOT_SCHEMA.fieldNames())
 
 
 def merge_epoch(snapshot: DataFrame | None, batch: DataFrame) -> DataFrame:
@@ -98,7 +106,7 @@ def run_incremental_snapshot(
     timeout_sec: int = 180,
 ) -> DataFrame:
     """Maintain the snapshot across every available epoch; returns the
-    final snapshot DataFrame."""
+    final snapshot DataFrame (empty when the feed is)."""
     snap_dir = os.path.join(out_dir, "snapshot")
     checkpoint_dir = os.path.join(out_dir, "snap_checkpoint")
 
@@ -117,12 +125,10 @@ def run_incremental_snapshot(
         # this pointer with a MERGE metadata commit.)
         cache.publish_snapshot(version, snap_dir)
 
-    q = (
+    run_available_now(
         read_change_stream(spark, feed_dir)
         .writeStream.foreachBatch(epoch_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    return spark.read.parquet(snap_dir)
+    return read_or_empty(spark, snap_dir, SNAPSHOT_SCHEMA)

@@ -33,8 +33,12 @@ SAMPLE_SIZE = 20
 # inference, funnel_conversion_window's ANSI div-by-zero) and removed
 # them here — 15 -> 12 ledger names (the r12 sweep's "16 raisers"
 # headline counted source_binaryfile_ingest, fixed in-window r12
-# before the ledger froze); round-13 full sweep: 276/288 OK with
-# exactly these 12 raising:
+# before the ledger froze).  The streaming run primitive
+# (streaming/pipeline.py: run_available_now, read_or_empty) then fixed
+# the eight streaming empty-dir round trips — an empty feed's result
+# path reads back as an empty frame of the declared schema, and the
+# dedup feed builder skips the re-delivery copy when there is no batch
+# to copy — 12 -> 4 ledger names:
 #   empty-dir round-trips — fixture staging writes ZERO files, the
 #     read side then fails on a missing/schema-less path (production
 #     ingest dirs always exist; the fix is pathGlobFilter/explicit
@@ -44,20 +48,8 @@ EXPECTED_RAISERS = frozenset(
         "dpp_pruned_revenue",
         "partitioned_sink_pruned_read",
         "sink_pipe_text",
-        "streaming_bitmap_distinct",
-        "streaming_dedup_exactly_once",
-        "streaming_interval_join",
-        "streaming_microbatch_epochs",
-        "streaming_session_windows",
-        "streaming_stateful_snapshot",
-        "streaming_static_enrichment",
-        "streaming_upsert_snapshot",
         #   designed loud guard (raises a clear ValueError by contract):
         "streaming_ivf_maintenance",
-        #   genuine empty-input bug class awaiting its vintage rotation
-        #   (SCALE.md queue): none — the round-12 findings are fixed.
-        #   The remaining streaming empty-dir entries rotate r14 with
-        #   the deferred r07 tail.
     }
 )
 
@@ -70,14 +62,6 @@ _LEDGER_FROZEN = frozenset(
         "dpp_pruned_revenue",
         "partitioned_sink_pruned_read",
         "sink_pipe_text",
-        "streaming_bitmap_distinct",
-        "streaming_dedup_exactly_once",
-        "streaming_interval_join",
-        "streaming_microbatch_epochs",
-        "streaming_session_windows",
-        "streaming_stateful_snapshot",
-        "streaming_static_enrichment",
-        "streaming_upsert_snapshot",
         "streaming_ivf_maintenance",
     }
 )

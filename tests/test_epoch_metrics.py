@@ -25,7 +25,9 @@ from cdc_extractor_spark.streaming.pipeline import (
     EPOCH_METRICS_SCHEMA,
     publish_epoch_metrics,
     run_cdc_pipeline,
+    windowed_counts_stream,
 )
+from cdc_extractor_spark.streaming.stateful import run_stateful_watermark
 
 BATCH_ROWS = (7, 5, 9)
 BASE_MS = 1_704_067_200_000
@@ -151,9 +153,26 @@ def test_one_job_and_one_scan_per_epoch(spark, feed, tmp_path):
     assert [n for n in listener.input_rows if n] == list(BATCH_ROWS)
 
 
-def test_timeout_raises_and_stops_the_query(spark, feed, tmp_path):
+def test_empty_feed_returns_no_rows(spark, tmp_path):
+    """No batch ever arrives, so no epoch publishes a row: the reference
+    crashes on exactly this (WorkerRunnable.java:145)."""
+    feed_dir = tmp_path / "feed"
+    feed_dir.mkdir()
+    metrics = run_cdc_pipeline(spark, str(feed_dir), str(tmp_path / "out"))
+    assert metrics.schema == EPOCH_METRICS_SCHEMA
+    assert metrics.count() == 0
+
+
+@pytest.mark.parametrize(
+    "run",
+    [run_cdc_pipeline, windowed_counts_stream, run_stateful_watermark],
+    ids=lambda f: f.__name__,
+)
+def test_timeout_raises_and_stops_the_query(spark, feed, tmp_path, run):
+    """One caller of each sink form: foreachBatch with a metrics read,
+    the parquet sink, and an update-mode stateful foreachBatch."""
     with pytest.raises(TimeoutError):
-        run_cdc_pipeline(spark, feed, str(tmp_path / "out"), timeout_sec=0.001)
+        run(spark, feed, str(tmp_path / "out"), timeout_sec=0.001)
     assert spark.streams.active == []
 
 

@@ -254,6 +254,7 @@ def test_pyds_pipe_chunk_sink_exactly_once(spark, sf_dir, tmp_path):
 
     from cdc_extractor_spark.sources import pyds
     from cdc_extractor_spark.sources.changes import changes_df
+    from cdc_extractor_spark.streaming.pipeline import run_available_now
 
     feed, ch = _feed(spark, sf_dir, tmp_path)
     out = str(tmp_path / "chunks")
@@ -261,15 +262,13 @@ def test_pyds_pipe_chunk_sink_exactly_once(spark, sf_dir, tmp_path):
     pyds.register(spark)
     pyds.register_sink(spark)
 
-    q = (
+    run_available_now(
         spark.readStream.format("changelog_poll").option("path", feed)
         .option("numPartitions", "2").load()
         .writeStream.format("pipe_chunks").option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
+        120,
     )
-    q.awaitTermination(120)
 
     chunks = [f for f in os.listdir(out) if f.startswith("chunk_")]
     manifests = [f for f in os.listdir(out) if f.startswith("_epoch_")]
@@ -312,6 +311,7 @@ def test_pyds_streaming_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path)
 
     from cdc_extractor_spark.sources import pyds
     from cdc_extractor_spark.sources.changes import changes_df
+    from cdc_extractor_spark.streaming.pipeline import run_available_now
 
     ch = changes_df(spark, sf_dir)
     mid = 600
@@ -328,15 +328,13 @@ def test_pyds_streaming_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path)
                         F.max("event_id").alias("hi")).first()
             if r["n"]:
                 seen.append((r["n"], r["lo"], r["hi"]))
-        q = (
+        run_available_now(
             spark.readStream.format("changelog_poll").option("path", feed)
             .option("numPartitions", "2").load()
             .writeStream.foreachBatch(body)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            120,
         )
-        q.awaitTermination(120)
         return seen
 
     first = run_once("first")
