@@ -150,7 +150,10 @@ def main() -> None:
     # core-count's table — both stay on disk after a scaling session.
     # Stdout contract unchanged (two JSON lines, summary last).
     try:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        # the live context, not the environment: a session built with
+        # an explicit master is labelled with the cores it really has
+        sc = spark.sparkContext
+        cpus = sc.defaultParallelism
         detail = Path(__file__).resolve().parent / "BENCH_DETAIL.md"
         detail_cn = Path(__file__).resolve().parent / f"BENCH_DETAIL_c{cpus}.md"
         lines = [
@@ -208,7 +211,7 @@ def main() -> None:
         for name, sec in sorted(timings.items(), key=lambda kv: (-kv[1], kv[0])):
             r1, r2 = reps[name]
             lines.append(f"| {name} | {sec:.3f} | {r1:.3f} | {r2:.3f} |")
-        lines.insert(3, f"cpus={cpus} (local[{cpus}])")
+        lines[3:3] = ["", f"cpus={cpus} ({sc.master})"]
         body = "\n".join(lines) + "\n"
         detail.write_text(body)
         detail_cn.write_text(body)

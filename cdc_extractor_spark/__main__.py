@@ -3,14 +3,19 @@
 ``Client.java:11-49`` reads ``-DnumberOfThread`` / ``-DrunDuration`` /
 ``-DsleepDuration`` / ``-Dtables`` from JVM system properties, spawns
 one coordinator, N workers and a staleness monitor, sleeps, then
-``System.exit(0)``.  Here the same four knobs configure a Structured
-Streaming run over the change feed: parallelism sizes the shuffle
-partitions (scan fan-out is engine-scheduled, A15), the poll interval
-is the trigger cadence, the table restriction is a pushed ``In``
+``System.exit(0)``.  Here three of those knobs configure one
+``availableNow`` Structured Streaming run over the change feed:
+parallelism sizes the shuffle partitions (scan fan-out is
+engine-scheduled, A15), the table restriction is a pushed ``In``
 filter (never SQL-interpolated — Config.java's injection-by-
 construction and missing-comma bugs are structurally impossible), and
 the run duration bounds ``awaitTermination``; shutdown is a drained
-stop, not a hard exit.
+stop, not a hard exit.  There is no poll interval: each ``run`` drains
+what the feed holds and stops, so the poll cadence is the caller's
+loop.  The staleness lines (the monitor of
+``QueryRequestRunnable.java:30-54``) are read off the same run's
+per-epoch metrics rows: ``lag = now − uptodate``, with ``now`` the
+run's newest commit timestamp.
 
 Usage:
   python -m cdc_extractor_spark run --sf-dir /root/testdata/sf0.001 \\
@@ -32,7 +37,6 @@ def _cmd_run(args: argparse.Namespace) -> int:
     from cdc_extractor_spark.sources.changes import changes_df
     from cdc_extractor_spark.streaming.pipeline import (
         run_cdc_pipeline,
-        run_observed_staleness,
         write_feed_batches,
     )
 
@@ -58,17 +62,12 @@ def _cmd_run(args: argparse.Namespace) -> int:
         )
     # an epoch whose batch the table filter empties reports null
     # uptodate (max over zero observed rows) — skip it, don't crash on it
-    now_ms = max(
-        (r["uptodate_ms"] for r in rows if r["uptodate_ms"] is not None),
-        default=0,
-    )
-    stale = run_observed_staleness(
-        spark, feed, os.path.join(args.out, "obs"), now_ms, timeout
-    )
-    for s in stale:
+    fresh = [r for r in rows if r["uptodate_ms"] is not None]
+    now_ms = max((r["uptodate_ms"] for r in fresh), default=0)
+    for r in fresh:
         print(
-            f"staleness batch={s['batch_id']} rows={s['n_rows']} "
-            f"lag_ms={s['staleness_ms']}"
+            f"staleness batch={r['epoch_id']} rows={r['n_rows']} "
+            f"lag_ms={now_ms - r['uptodate_ms']}"
         )
     print(f"extract dir: {os.path.join(args.out, 'extract')}")
     return 0
@@ -119,9 +118,6 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--out", required=True)
     r.add_argument("--feed", default=None, help="existing feed dir (else derived)")
     r.add_argument("--workers", type=int, default=4, help="-DnumberOfThread")
-    r.add_argument(
-        "--poll-interval-ms", type=int, default=1000, help="-DsleepDuration"
-    )
     r.add_argument(
         "--tables", default="customer,orders", help="-Dtables (comma list)"
     )

@@ -18,8 +18,9 @@ Mapping (SURVEY.md §3):
   watermark metrics are an ``Observation`` on the extract write, so an
   epoch is one Spark job;
 - staleness monitor (``QueryRequestRunnable.java:30-54``)  ≙  the
-  engine's ``StreamingQueryProgress`` + our per-epoch metrics rows —
-  no shared mutable ``uptodate`` static, no broken lock (§2 bug list).
+  per-epoch metrics rows (``now − uptodate_ms``; the CLI's ``run``
+  prints it) — no shared mutable ``uptodate`` static, no broken lock
+  (§2 bug list).
 
 The bounded task queue / backpressure (``Client.java:17``,
 ``ArrayBlockingQueue(10000)``) has no code here at all: trigger
@@ -341,55 +342,6 @@ def run_cdc_pipeline(
         timeout_sec,
     )
     return read_or_empty(spark, metrics_dir, EPOCH_METRICS_SCHEMA)
-
-
-def run_observed_staleness(
-    spark: SparkSession,
-    feed_dir: str,
-    out_dir: str,
-    now_ms: int,
-    timeout_sec: int = 120,
-) -> list[dict]:
-    """A12 streaming form — the staleness monitor
-    (``QueryRequestRunnable.java:30-54``: sample ``now − uptodate`` every
-    10 ms off a shared static) becomes ``df.observe()`` metrics read from
-    ``StreamingQueryProgress`` — engine-delivered per epoch, no shared
-    mutable state, no unsynchronized cross-thread read (§2 bug 4).
-
-    Returns one dict per epoch: observed row count, max commit ts, and
-    the staleness lag against the fixed ``now_ms`` (determinism rule:
-    never wall clock).  Driver-side cost is O(epochs).
-    """
-    checkpoint_dir = os.path.join(out_dir, "obs_checkpoint")
-    observed = read_change_stream(spark, feed_dir).observe(
-        "freshness",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.max("commit_ts_ms").alias("uptodate_ms"),
-    )
-    progress: list[dict] = []
-
-    def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.format("noop").mode("overwrite").save()
-
-    q = run_available_now(
-        observed.writeStream.foreachBatch(epoch_body).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        timeout_sec,
-    )
-    for p in q.recentProgress:
-        row = p["observedMetrics"].get("freshness") if p["observedMetrics"] else None
-        if row is None or row["n_rows"] == 0:
-            continue
-        progress.append(
-            {
-                "batch_id": p["batchId"],
-                "n_rows": row["n_rows"],
-                "uptodate_ms": row["uptodate_ms"],
-                "staleness_ms": now_ms - row["uptodate_ms"],
-            }
-        )
-    return progress
 
 
 def windowed_counts_stream(

@@ -3,6 +3,8 @@ process launch (`Client.java:11-49`) re-expressed; see __main__.py."""
 
 from __future__ import annotations
 
+import re
+
 from cdc_extractor_spark.__main__ import main
 
 
@@ -37,7 +39,15 @@ def test_cli_run_extracts_all_epochs(spark, sf_dir, tmp_path, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "epoch=0" in out and "epoch=1" in out
-    assert "staleness batch=" in out
+    # one freshness source: the staleness lines are read off the same
+    # run's metrics rows, so they count only the monitored table's rows
+    # (an epoch the filter empties has no uptodate and no staleness line)
+    epochs = re.findall(r"^epoch=\d+ .* rows=(\d+) .* uptodate_ms=(\S+)$", out, re.M)
+    stale = re.findall(r"^staleness batch=\d+ rows=(\d+) lag_ms=(-?\d+)$", out, re.M)
+    assert sum(int(n) for n, _ in stale) == sum(int(n) for n, _ in epochs)
+    assert len(stale) == sum(u != "None" for _, u in epochs)
+    # the newest epoch is the run's "now": lags are >= 0 and its lag is 0
+    assert min(int(lag) for _, lag in stale) == 0
     # the table restriction demuxes only the monitored table
     extract = tmp_path / "out" / "extract"
     parts = {p.name for p in extract.iterdir() if p.name.startswith("table_name=")}

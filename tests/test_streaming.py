@@ -12,7 +12,6 @@ from cdc_extractor_spark.sinks import read_pipe_text, write_pipe_text
 from cdc_extractor_spark.sources.changes import changes_df, changes_with_row_data
 from cdc_extractor_spark.streaming.pipeline import (
     run_cdc_pipeline,
-    run_observed_staleness,
     windowed_counts_stream,
     write_feed_batches,
 )
@@ -127,21 +126,6 @@ def test_incremental_snapshot_equals_batch_apply(spark, feed, tmp_path):
         for r in truth.select(*got.columns).collect()
     }
     assert g == t
-
-
-def test_observed_staleness_per_epoch(spark, feed, tmp_path):
-    feed_dir, _, changes = feed
-    global_max = changes.agg(F.max("commit_ts_ms")).first()[0]
-    now_ms = global_max + 60_000  # fixed "now", 1 min past the feed tip
-    prog = run_observed_staleness(spark, feed_dir, str(tmp_path / "out"), now_ms)
-    assert len(prog) == N_BATCHES
-    assert sum(p["n_rows"] for p in prog) == changes.count()
-    # the final epoch's watermark reaches the feed tip; staleness is the
-    # exact lag against the fixed now
-    tip = max(prog, key=lambda p: p["uptodate_ms"])
-    assert tip["uptodate_ms"] == global_max
-    assert tip["staleness_ms"] == 60_000
-    assert all(p["staleness_ms"] >= 60_000 for p in prog)
 
 
 def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):

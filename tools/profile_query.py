@@ -8,7 +8,8 @@ formatted plan of the final frame to <plans_dir>/<name>.txt.
 Job count: eager actions inside the query builder (localCheckpoint,
 count, collect, approxQuantile) each schedule extra jobs before the
 timed noop write; stage count sums the stages of those jobs (skipped
-result stages of reused exchanges still appear as stage ids).
+result stages of reused exchanges still appear as stage ids).  Both
+come from ``scheduled`` in tools/ab.py, the A/B runner's counter.
 
 Usage:
   python tools/profile_query.py [--reps N] [--plans DIR] name [name ...]
@@ -40,20 +41,22 @@ def main() -> None:
         del args[i : i + 2]
         os.makedirs(plans_dir, exist_ok=True)
 
+    from ab import scheduled
+
     from cdc_extractor_spark.queries import QUERIES
     from cdc_extractor_spark.session import get_session
 
     spark = get_session(app_name="profile_query")
-    sc = spark.sparkContext
 
     # warm the JVM the same way bench.py does
     warm = spark.read.parquet(f"{SF_DIR}/region.parquet")
     warm.groupBy("r_name").count().write.format("noop").mode("overwrite").save()
 
-    jtracker = sc._jsc.sc().statusTracker()
-
-    def job_ids() -> list[int]:
-        return sorted(jtracker.getJobIdsForGroup(None))
+    def run(fn):
+        t0 = time.perf_counter()
+        df = fn(spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+        return df, round(time.perf_counter() - t0, 3)
 
     print(f"{'query':42s} {'sec':>7s} {'jobs':>5s} {'stages':>7s}  reps")
     for name in args:
@@ -61,19 +64,10 @@ def main() -> None:
         times: list[float] = []
         jobs = stages = 0
         for r in range(reps):
-            before = job_ids()
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-            if r == 0:
-                new = [j for j in job_ids() if j not in before]
-                jobs = len(new)
-                stages = 0
-                for jid in new:
-                    info = jtracker.getJobInfo(jid)
-                    if info.nonEmpty():
-                        stages += len(info.get().stageIds())
+            if r > 0:
+                df, sec = run(fn)
+            else:
+                (df, sec), jobs, stages = scheduled(spark, lambda: run(fn))
                 if plans_dir is not None:
                     fmt = df._sc._jvm.PythonSQLUtils.explainString(
                         df._jdf.queryExecution(), "formatted"
@@ -82,6 +76,7 @@ def main() -> None:
                         os.path.join(plans_dir, f"{name}.txt"), "w"
                     ) as f:
                         f.write(fmt)
+            times.append(sec)
             del df
             gc.collect()
         print(f"{name:42s} {min(times):7.3f} {jobs:5d} {stages:7d}  {times}")
